@@ -267,14 +267,12 @@ def main():
             def _ours_points_cluster():
                 # r16 OPT: point-ingest fast lane (hilbert_cluster_points,
                 # in the repo since r11 but the bench still ran the generic
-                # sampled lane behind an st_point UDF — whose stats job
-                # evaluates the full ArrowEval WKB build over every row and
-                # whose fused crossing then re-decodes the WKB it just
-                # built). point_xy keeps the stats JVM-side and assembles
-                # WKB+bbox+hilbert+route in ONE crossing. Same layout
-                # schema; hilbert values use the EXACT data bounds (JVM
-                # agg) instead of the generic lane's sampled approximation.
-                # Isolated interleaved A/B at 10M (ab_points_cluster.py):
+                # lane behind an st_point UDF — whose stats job evaluates
+                # the full ArrowEval WKB build over every row). point_xy
+                # keeps the stats JVM-side, ONE narrow hilbert/route
+                # crossing, WKB built post-sort. Same layout schema;
+                # hilbert values use the EXACT data bounds (JVM agg).
+                # Isolated interleaved A/B at 10M (OPTIMIZATION_r16.md):
                 # old 24.9s / new 16.0s / duck COPY 20.0s (1.24 -> 0.80).
                 write_geo_parquet(
                     flat.select("id", "x", "y"),

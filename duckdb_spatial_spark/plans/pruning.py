@@ -6,10 +6,10 @@ load: sort by xmin, slice, sort by y-center, pack 128-ary —
 skipping. Spark has no secondary indexes; the idiomatic equivalent is:
 
   write time:  materialize bbox as 4 plain double columns + a Hilbert index
-               of the bbox center, ``repartitionByRange(hilbert)`` +
+               of the bbox center, range-partition by hilbert +
                ``sortWithinPartitions(hilbert)`` so spatially-near rows land
                in the same parquet row groups (same locality goal as the
-               STR pack);
+               STR pack; one placement rule, see write_geo_parquet);
   query time:  rewrite ``pred(geom, const)`` into bbox conjuncts on those
                numeric columns (exactly the rewrite the reference's
                ``RTreeIndexScanOptimizer`` does, ``rtree_index_plan_scan.cpp:
@@ -180,134 +180,136 @@ def hilbert_cluster(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Add bbox columns + hilbert index and range-partition by it.
 
     ``bounds`` (min_x, min_y, max_x, max_y) defaults to the data extent
-    (one aggregate job, like the reference's index build scan).
-
-    ``sample_fraction`` switches to **sampled split points**: Spark's
-    ``repartitionByRange`` runs a reservoir-sampling job that re-evaluates
-    the whole child plan — including the geometry decode — before the
-    shuffle pass evaluates it again. With a fraction set, a single bounded
-    stats job per-batch-samples bbox centers (and the data bounds, when not
-    given); split points come from exact quantiles of the sampled Hilbert
-    values driver-side; then ONE barrier pass computes bbox + hilbert +
-    route together and one hash shuffle places bucket b in partition b via
-    :func:`_hash_preimages`. Exactly two decodes of the data (stats +
-    shuffle) regardless of how many plan operators reference the columns —
-    the difference matters at 100 TB (and measurably at 10M rows)."""
-    from ..functions import fastpath
-
+    (one aggregate job, like the reference's index build scan). Placement
+    is Spark's ``repartitionByRange`` on the hilbert column."""
     n = int(num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    gi = df.columns.index(geom_col)
-
-    if not sample_fraction:
-        df = with_bbox_columns(df, geom_col)
-        if bounds is None:
-            r = df.agg(
-                F.min(BBOX_COLS[0]), F.min(BBOX_COLS[1]), F.max(BBOX_COLS[2]), F.max(BBOX_COLS[3])
-            ).collect()[0]
-            bounds = (r[0], r[1], r[2], r[3])
-        cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
-        cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
-        df = df.withColumn(
-            "hilbert",
-            udfs.st_hilbert(
-                cx, cy, F.lit(float(bounds[0])), F.lit(float(bounds[1])), F.lit(float(bounds[2])), F.lit(float(bounds[3]))
-            ),
-        )
-        return df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
-
-    # --- sampled path: one geom-only stats job, then ONE fused projection ---
-    # The fused pandas UDF emits struct<bbox, hilbert, route> in a single
-    # Project; Spark chains it with any upstream geometry-constructor UDF
-    # into ONE ArrowEvalPython crossing (verified: one node, rows evaluated
-    # exactly once), and the only downstream consumers are the shuffle and
-    # the sort — no operator that could re-expand the projection.
-    frac = float(sample_fraction)
-    step = max(int(round(1.0 / max(frac, 1e-9))), 1)
-    stats_schema = T.StructType([
-        T.StructField("mnx", T.DoubleType()), T.StructField("mny", T.DoubleType()),
-        T.StructField("mxx", T.DoubleType()), T.StructField("mxy", T.DoubleType()),
-        T.StructField("sx", T.ArrayType(T.DoubleType())),
-        T.StructField("sy", T.ArrayType(T.DoubleType())),
-    ])
-
-    def stats_gen(batches):
-        # decode only every step-th row: bounds come from the sample too,
-        # which can undershoot the true extent — hilbert_scaled clips
-        # out-of-range centers to the curve edge, so clustering quality at
-        # the fringe degrades slightly but correctness never does
-        for pdf in batches:
-            mnx, mny, mxx, mxy = fastpath.bbox_arrays(pdf.iloc[::step, 0])
-            ok = ~np.isnan(mnx)
-            if not ok.any():
-                continue
-            cx = (mnx[ok] + mxx[ok]) / 2.0
-            cy = (mny[ok] + mxy[ok]) / 2.0
-            yield pd.DataFrame({
-                "mnx": [float(np.min(mnx[ok]))], "mny": [float(np.min(mny[ok]))],
-                "mxx": [float(np.max(mxx[ok]))], "mxy": [float(np.max(mxy[ok]))],
-                "sx": [cx.tolist()], "sy": [cy.tolist()],
-            })
-
-    stats = df.select(geom_col).mapInPandas(stats_gen, stats_schema).collect()
-    if not stats:
-        return with_bbox_columns(df, geom_col).withColumn("hilbert", F.lit(None).cast("long"))
+    df = with_bbox_columns(df, geom_col)
     if bounds is None:
-        bounds = (
-            min(r.mnx for r in stats), min(r.mny for r in stats),
-            max(r.mxx for r in stats), max(r.mxy for r in stats),
-        )
-    sx = np.concatenate([np.asarray(r.sx) for r in stats if r.sx])
-    sy = np.concatenate([np.asarray(r.sy) for r in stats if r.sy])
-    hs = udfs.hilbert_scaled(sx, sy, *[float(b) for b in bounds])
-    probs = np.arange(1, n) / n
-    splits = np.unique(np.quantile(hs, probs).astype(np.int64)) if len(hs) else np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(df.sparkSession, nb), dtype=np.int32) if nb > 1 else None
+        r = df.agg(
+            F.min(BBOX_COLS[0]), F.min(BBOX_COLS[1]), F.max(BBOX_COLS[2]), F.max(BBOX_COLS[3])
+        ).collect()[0]
+        bounds = (r[0], r[1], r[2], r[3])
+    cx = (F.col(BBOX_COLS[0]) + F.col(BBOX_COLS[2])) / 2
+    cy = (F.col(BBOX_COLS[1]) + F.col(BBOX_COLS[3])) / 2
+    df = df.withColumn(
+        "hilbert",
+        udfs.st_hilbert(
+            cx, cy, F.lit(float(bounds[0])), F.lit(float(bounds[1])), F.lit(float(bounds[2])), F.lit(float(bounds[3]))
+        ),
+    )
+    return df.repartitionByRange(n, "hilbert").sortWithinPartitions("hilbert")
+
+
+def _hilbert_place(
+    df: DataFrame,
+    cx,
+    cy,
+    bounds: tuple | None = None,
+    num_partitions: int | None = None,
+    extent: tuple | None = None,
+) -> tuple[DataFrame, tuple]:
+    """The placement core of the numeric-input lanes: sample the centers
+    ``(cx, cy)``, cut the Hilbert curve at sampled quantiles, route every
+    row to its curve range, sort within each range.
+
+    * bounds, when not given: ONE JVM aggregate over ``extent`` (the four
+      (min_x, min_y, max_x, max_y) Columns; default the centers themselves);
+      empty or all-NULL input gets ``(0, 0, 0, 0)``;
+    * split points: a 1% Bernoulli sample (seed 7, at most 2M rows — 1% of
+      a 100 TB table is not collectable) of the non-NULL, non-NaN centers,
+      cut at ``n - 1`` quantiles of their hilbert values. A NULL center
+      has no curve position, so it stays out of the sample;
+    * ONE narrow Python crossing before the exchange: (cx, cy) in,
+      (hilbert, route) out — 16 B/row up, 12 B/row down. ``route`` is a
+      :func:`_hash_preimages` key, so ``repartition(nb, route)`` puts curve
+      range b in partition b with a single hash shuffle and no
+      ``repartitionByRange`` sampling pass over the data;
+    * ``sortWithinPartitions("hilbert")``.
+
+    Rows with a NULL/NaN center keep a NULL hilbert. Returns
+    ``(placed, bounds)``: ``df`` plus a ``hilbert`` column, and the
+    clustering bounds used."""
+    spark = df.sparkSession
+    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    if bounds is None:
+        ex = extent or (cx, cy, cx, cy)
+        r = df.agg(F.min(ex[0]), F.min(ex[1]), F.max(ex[2]), F.max(ex[3])).collect()[0]
+        bounds = (0.0, 0.0, 0.0, 0.0) if None in r else tuple(r)
     b0, b1, b2, b3 = (float(b) for b in bounds)
-
-    stype = T.StructType(
-        [T.StructField(c, T.DoubleType()) for c in BBOX_COLS]
-        + [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
+    sample = (
+        df.select(cx.alias("x"), cy.alias("y"))
+        .sample(fraction=0.01, seed=7)
+        .dropna()
+        .limit(2_000_000)
+        .collect()
     )
-
-    @F.pandas_udf(stype)
-    def fused(g: pd.Series) -> pd.DataFrame:
-        arrs = fastpath.bbox_arrays(g)
-        mnx, mny, mxx, mxy = arrs
-        nan = np.isnan(mnx)
-        h = udfs.hilbert_scaled(
-            np.nan_to_num((mnx + mxx) / 2.0), np.nan_to_num((mny + mxy) / 2.0), b0, b1, b2, b3
+    if sample:
+        hs = udfs.hilbert_scaled(
+            np.asarray([r.x for r in sample], dtype=np.float64),
+            np.asarray([r.y for r in sample], dtype=np.float64),
+            b0, b1, b2, b3,
         )
-        bucket = np.searchsorted(splits, h, side="right") if len(splits) else np.zeros(len(h), dtype=np.int64)
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        out = dict(zip(BBOX_COLS, arrs))
-        if nan.any():
-            out = {k: pd.arrays.FloatingArray(v, nan) for k, v in out.items()}
-            out["hilbert"] = pd.arrays.IntegerArray(h, nan)
-        else:
-            out["hilbert"] = h
-        out["route"] = route.astype(np.int32)
-        return pd.DataFrame(out)
+        splits = np.unique(np.quantile(hs, np.arange(1, n) / n).astype(np.int64))
+    else:
+        splits = np.array([], dtype=np.int64)
+    nb = len(splits) + 1
+    jmap = np.asarray(_hash_preimages(spark, nb) if nb > 1 else [0], dtype=np.int32)
 
-    s = fused(F.col(geom_col))
-    out = df.select("*", s.alias("_s")).select(
-        "*",
-        *[F.col(f"_s.{c}").alias(c) for c in BBOX_COLS],
-        F.col("_s.hilbert").alias("hilbert"),
-        F.col("_s.route").alias("_route"),
+    @F.pandas_udf("hilbert long, route int")
+    def hilbert_route(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+        xs = x.to_numpy(dtype=np.float64, na_value=np.nan)
+        ys = y.to_numpy(dtype=np.float64, na_value=np.nan)
+        nan = np.isnan(xs) | np.isnan(ys)
+        h = udfs.hilbert_scaled(np.nan_to_num(xs), np.nan_to_num(ys), b0, b1, b2, b3)
+        return pd.DataFrame({
+            "hilbert": pd.arrays.IntegerArray(h, nan) if nan.any() else h,
+            "route": jmap[np.searchsorted(splits, h, side="right")],
+        })
+
+    routed = df.select("*", hilbert_route(cx, cy).alias("_s")).select(
+        "*", F.col("_s.hilbert").alias("hilbert"), F.col("_s.route").alias("_route")
     ).drop("_s")
-    if nb == 1:
-        return out.coalesce(1).sortWithinPartitions("hilbert").drop("_route")
-    return (
-        out.repartition(nb, F.col("_route"))
-        .sortWithinPartitions("hilbert")
-        .drop("_route")
+    placed = routed.coalesce(1) if nb == 1 else routed.repartition(nb, F.col("_route"))
+    return placed.sortWithinPartitions("hilbert").drop("_route"), (b0, b1, b2, b3)
+
+
+def _points_lane(df, x_col, y_col, geom_col, bounds, num_partitions):
+    px, py = F.col(x_col), F.col(y_col)
+    placed, bounds = _hilbert_place(df, px, py, bounds, num_partitions)
+    # WKB + bbox sidecars materialize HERE, post-sort, in the write stage;
+    # bbox NULL iff either coordinate is NULL (zero-boxing arrow kernel)
+    both = px.isNotNull() & py.isNotNull()
+    keep = [c for c in df.columns if c not in (x_col, y_col)]
+    return placed.select(
+        *keep,
+        _point_wkb_arrow(px, py).alias(geom_col),
+        F.when(both, px).alias(BBOX_COLS[0]),
+        F.when(both, py).alias(BBOX_COLS[1]),
+        F.when(both, px).alias(BBOX_COLS[2]),
+        F.when(both, py).alias(BBOX_COLS[3]),
+        "hilbert",
+    ), bounds
+
+
+def _boxes_lane(df, min_x_col, min_y_col, max_x_col, max_y_col, geom_col, bounds, num_partitions):
+    ext = tuple(F.col(c) for c in (min_x_col, min_y_col, max_x_col, max_y_col))
+    mnx, mny, mxx, mxy = ext
+    placed, bounds = _hilbert_place(
+        df, (mnx + mxx) / 2, (mny + mxy) / 2, bounds, num_partitions, extent=ext
     )
+    # envelope WKB built HERE — after the exchange and sort, once, never
+    # shuffled; bbox sidecars are zero-cost renames of the bound columns
+    keep = [c for c in df.columns if c not in (min_x_col, min_y_col, max_x_col, max_y_col)]
+    return placed.select(
+        *keep,
+        _envelope_wkb_arrow(mnx, mny, mxx, mxy).alias(geom_col),
+        *[c.alias(name) for c, name in zip(ext, BBOX_COLS)],
+        "hilbert",
+    ), bounds
 
 
 def hilbert_cluster_points(
@@ -317,90 +319,19 @@ def hilbert_cluster_points(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float = 0.01,
-    seed: int = 7,
 ) -> DataFrame:
     """Point-ingest clustering: the source rows carry plain ``x``/``y``
     doubles (raw telemetry, the 100 TB shape), so the bounds aggregate and
-    the split-point sample run entirely JVM-side against the numeric
-    columns — the generic path must push every row through the geometry
-    UDF chain even for its stats job.
+    the split-point sample run JVM-side against the numeric columns, and
+    the exchange + sort carry plain numerics (~36 B/row), never WKB
+    (placement: :func:`_hilbert_place`, center = the point). The 21-byte
+    point WKB and the bbox sidecars are built after the sort, in the write
+    stage; bbox/hilbert/geom are NULL when either coordinate is NULL.
 
-    r16 optimization (guide §2.3/§8 — shuffle fewer bytes, build heavy
-    bytes once, late): the pre-exchange crossing now computes ONLY
-    (hilbert, route) from (x, y) — 16 B/row up, 12 B/row down — so the
-    exchange and sort carry plain numerics (~36 B/row instead of ~61 with
-    the 21-byte WKB and duplicated bbox doubles). The point WKB is
-    assembled AFTER the sort, in the write stage, and the bbox sidecars
-    are JVM conditional projections of x/y. Per-row output values are
-    bit-identical to the pre-r16 fused lane (same WKB construction, same
-    null semantics: bbox/hilbert/geom NULL when either coordinate is
-    NULL), pinned by tests/test_storage_sources.py and
-    tests/test_hilbert_boxes.py."""
-    from ..functions import fastpath  # noqa: F401  (parity with generic path)
-
-    spark = df.sparkSession
-    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if bounds is None:
-        r = df.agg(F.min(x_col), F.min(y_col), F.max(x_col), F.max(y_col)).collect()[0]
-        bounds = (r[0], r[1], r[2], r[3])
-    b0, b1, b2, b3 = (float(b) for b in bounds)
-    sample = (
-        df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .sample(fraction=float(sample_fraction), seed=seed)
-        .limit(2_000_000)  # driver-memory guard: 1% of a 100 TB table is not collectable
-        .collect()
-    )
-    if sample:
-        sx = np.asarray([r.x for r in sample], dtype=np.float64)
-        sy = np.asarray([r.y for r in sample], dtype=np.float64)
-        hs = udfs.hilbert_scaled(sx, sy, b0, b1, b2, b3)
-        probs = np.arange(1, n) / n
-        splits = np.unique(np.quantile(hs, probs).astype(np.int64))
-    else:
-        splits = np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(spark, nb), dtype=np.int32) if nb > 1 else None
-
-    stype = T.StructType(
-        [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
-    )
-
-    @F.pandas_udf(stype)
-    def hilbert_route(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        xs = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        ys = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        nan = np.isnan(xs) | np.isnan(ys)
-        h = udfs.hilbert_scaled(np.nan_to_num(xs), np.nan_to_num(ys), b0, b1, b2, b3)
-        bucket = np.searchsorted(splits, h, side="right") if len(splits) else np.zeros(len(h), dtype=np.int64)
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        return pd.DataFrame({
-            "hilbert": pd.arrays.IntegerArray(h, nan) if nan.any() else h,
-            "route": route.astype(np.int32),
-        })
-
-    px, py = F.col(x_col), F.col(y_col)
-    both = px.isNotNull() & py.isNotNull()
-    keep = [c for c in df.columns if c not in (x_col, y_col)]
-    routed = df.select("*", hilbert_route(px, py).alias("_s")).select(
-        "*", F.col("_s.hilbert").alias("hilbert"), F.col("_s.route").alias("_route")
-    ).drop("_s")
-    if nb == 1:
-        placed = routed.coalesce(1).sortWithinPartitions("hilbert")
-    else:
-        placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
-    # WKB + bbox sidecars materialize HERE, post-sort, in the write stage;
-    # bbox NULL iff either coordinate is NULL (the fused lane's semantics).
-    # r17: zero-boxing arrow_udf kernel (scripts/ab_wkb_kernel.py)
-    return placed.select(
-        *keep,
-        _point_wkb_arrow(px, py).alias(geom_col),
-        F.when(both, px).alias(BBOX_COLS[0]),
-        F.when(both, py).alias(BBOX_COLS[1]),
-        F.when(both, px).alias(BBOX_COLS[2]),
-        F.when(both, py).alias(BBOX_COLS[3]),
-        "hilbert",
-    )
+    Output schema matches the generic lane: (*other cols, geom, bbox_*,
+    hilbert), with per-row values identical to ``st_point -> hilbert_cluster``
+    (tests/test_storage_sources.py, tests/test_hilbert_boxes.py)."""
+    return _points_lane(df, x_col, y_col, geom_col, bounds, num_partitions)[0]
 
 
 def hilbert_cluster_boxes(
@@ -412,99 +343,22 @@ def hilbert_cluster_boxes(
     geom_col: str = "geom",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float = 0.01,
-    seed: int = 7,
 ) -> DataFrame:
     """Box-ingest clustering: source rows carry the rectangle bounds as 4
-    plain double columns (any ingested-extent layout — building footprints,
-    tiles, envelopes), so, like :func:`hilbert_cluster_points`, the bounds
-    aggregate and split-point sample run entirely JVM-side. The generic
-    path must instead evaluate the geometry-constructor UDF chain + WKB
-    bbox decode once for the bounds job, AGAIN for repartitionByRange's
-    reservoir sample, and AGAIN for the shuffle pass (3 full Python
-    evaluations, audited r16).
-
-    Plan shape (optimization-guide §2.3/§8: decide with small rows, build
-    heavy bytes once, late):
-
-    * ONE narrow Python crossing BEFORE the exchange: (cx, cy) in,
-      (hilbert, route) out — 16 B/row up, 12 B/row down;
-    * the exchange + sort carry only the numeric bounds + hilbert
-      (~56 B/row), never WKB;
-    * the 93-byte envelope WKB is assembled AFTER the sort, in the write
-      stage, by the vectorized :func:`udfs.st_makeenvelope` kernel —
-      built exactly once and never shuffled.
+    plain double columns (building footprints, tiles, envelopes). Same
+    placement as :func:`hilbert_cluster_points` with the box center; the
+    bounds aggregate covers the box extents. The generic lane would
+    instead evaluate the geometry-constructor UDF chain + WKB bbox decode
+    for the bounds job, again for ``repartitionByRange``'s reservoir
+    sample, and again for the shuffle pass. The exchange + sort carry the
+    numeric bounds + hilbert (~56 B/row); the 93-byte envelope WKB is built
+    after the sort, byte-identical to :func:`udfs.st_makeenvelope`.
 
     Output schema matches the generic lane: (*other cols, geom, bbox_*,
     hilbert); bbox sidecars are plain renames of the input bounds."""
-    spark = df.sparkSession
-    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    mnx, mny, mxx, mxy = (F.col(c) for c in (min_x_col, min_y_col, max_x_col, max_y_col))
-    if bounds is None:
-        r = df.agg(F.min(mnx), F.min(mny), F.max(mxx), F.max(mxy)).collect()[0]
-        bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
-    b0, b1, b2, b3 = (float(b) for b in bounds)
-    sample = (
-        df.select(((mnx + mxx) / 2).alias("x"), ((mny + mxy) / 2).alias("y"))
-        .sample(fraction=float(sample_fraction), seed=seed)
-        .limit(2_000_000)  # driver-memory guard, same as the points lane
-        .collect()
-    )
-    sample = [r for r in sample if r.x is not None and r.y is not None]
-    if sample:
-        sx = np.asarray([r.x for r in sample], dtype=np.float64)
-        sy = np.asarray([r.y for r in sample], dtype=np.float64)
-        hs = udfs.hilbert_scaled(sx, sy, b0, b1, b2, b3)
-        probs = np.arange(1, n) / n
-        splits = np.unique(np.quantile(hs, probs).astype(np.int64))
-    else:
-        splits = np.array([], dtype=np.int64)
-    nb = len(splits) + 1
-    jmap = np.asarray(_hash_preimages(spark, nb), dtype=np.int32) if nb > 1 else None
-
-    stype = T.StructType(
-        [T.StructField("hilbert", T.LongType()), T.StructField("route", T.IntegerType())]
-    )
-
-    @F.pandas_udf(stype)
-    def hilbert_route(cx: pd.Series, cy: pd.Series) -> pd.DataFrame:
-        xs = cx.to_numpy(dtype=np.float64, na_value=np.nan)
-        ys = cy.to_numpy(dtype=np.float64, na_value=np.nan)
-        nan = np.isnan(xs) | np.isnan(ys)
-        h = udfs.hilbert_scaled(np.nan_to_num(xs), np.nan_to_num(ys), b0, b1, b2, b3)
-        bucket = (
-            np.searchsorted(splits, h, side="right")
-            if len(splits)
-            else np.zeros(len(h), dtype=np.int64)
-        )
-        route = jmap[bucket] if jmap is not None else np.zeros(len(h), dtype=np.int32)
-        out = {
-            "hilbert": pd.arrays.IntegerArray(h, nan) if nan.any() else h,
-            "route": route.astype(np.int32),
-        }
-        return pd.DataFrame(out)
-
-    keep = [c for c in df.columns if c not in (min_x_col, min_y_col, max_x_col, max_y_col)]
-    routed = df.select(
-        "*", hilbert_route((mnx + mxx) / 2, (mny + mxy) / 2).alias("_s")
-    ).select("*", F.col("_s.hilbert").alias("hilbert"), F.col("_s.route").alias("_route")).drop("_s")
-    if nb == 1:
-        placed = routed.coalesce(1).sortWithinPartitions("hilbert")
-    else:
-        placed = routed.repartition(nb, F.col("_route")).sortWithinPartitions("hilbert")
-    # WKB assembled HERE — after the exchange and sort, once, in the write
-    # stage; bbox sidecars are zero-cost renames of the bound columns.
-    # r17: zero-boxing arrow_udf kernel, byte-identical to
-    # udfs.st_makeenvelope (scripts/ab_wkb_kernel.py)
-    return placed.select(
-        *keep,
-        _envelope_wkb_arrow(mnx, mny, mxx, mxy).alias(geom_col),
-        mnx.alias(BBOX_COLS[0]),
-        mny.alias(BBOX_COLS[1]),
-        mxx.alias(BBOX_COLS[2]),
-        mxy.alias(BBOX_COLS[3]),
-        "hilbert",
-    )
+    return _boxes_lane(
+        df, min_x_col, min_y_col, max_x_col, max_y_col, geom_col, bounds, num_partitions
+    )[0]
 
 
 def write_geo_parquet(
@@ -514,70 +368,54 @@ def write_geo_parquet(
     mode: str = "overwrite",
     bounds: tuple | None = None,
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
     box_xyxy: tuple | None = None,
 ) -> None:
     """Hilbert-clustered GeoParquet-style write (geometry stays WKB binary,
     which IS GeoParquet's encoding).
 
-    ``point_xy=(x_col, y_col)``: point-ingest fast lane — geometry is
-    ASSEMBLED here from numeric columns (stats jobs stay JVM-side, one
-    Python crossing total; see :func:`hilbert_cluster_points`).
+    Placement rule, the same for every lane: each row sits on the Hilbert
+    curve at its bbox center (scaled to ``bounds``, default the data
+    extent); the layout's ``num_partitions`` files hold consecutive curve
+    ranges, each sorted by hilbert. The lanes differ only in how they
+    build the center and the heavy columns:
 
-    ``box_xyxy=(min_x, min_y, max_x, max_y)``: box-ingest fast lane —
-    same idea for rectangle extents (stats JVM-side, one narrow Python
-    crossing for hilbert/route, envelope WKB built post-sort; see
-    :func:`hilbert_cluster_boxes`).
+    * ``point_xy=(x_col, y_col)``: center = the point; the point WKB is
+      assembled post-sort from the numeric columns
+      (:func:`hilbert_cluster_points`);
+    * ``box_xyxy=(min_x, min_y, max_x, max_y)``: center = the box center;
+      the envelope WKB is assembled post-sort (:func:`hilbert_cluster_boxes`);
+    * neither: the geometry column is decoded for its bbox and placed by
+      ``repartitionByRange`` (:func:`hilbert_cluster`).
 
-    Parquet dictionary encoding is disabled: WKB geometries are near-unique,
-    so dictionary pages only add CPU + a failed-dictionary fallback per row
-    group (measured 2.3s of a 6s write at 10M points).
+    The two numeric lanes share one placement core with fixed constants
+    (1% seeded sample of the centers for the split points; no options).
 
-    Writer encodings (r16, optimization-guide §6 — the cluster-build lanes
-    are write-wall-bound, so bytes written are the wall): v2 data pages
-    (DELTA_BINARY_PACKED for the SORTED hilbert int64 + id, DELTA_BYTE_ARRAY
-    prefix-delta for WKB whose consecutive rows share header + high
-    coordinate bytes after the hilbert sort) + zstd. Measured on the bench
-    layouts (scripts/probe_parquet_encoding.py, 3M rows, interleaved reps):
+    Overwrites to a local or ``file:`` location also record
+    ``_geo_layout.json``: the clustering bounds (for appends) and per-file
+    bboxes from one footer-stats job (for :func:`scan_geo_parquet`'s
+    manifest pruning).
+
+    Writer options (:data:`GEO_PARQUET_WRITE_OPTIONS`): dictionary off —
+    WKB geometries are near-unique, so dictionary pages only add CPU + a
+    failed-dictionary fallback per row group (measured 2.3s of a 6s write
+    at 10M points); v2 data pages (DELTA_BINARY_PACKED for the sorted
+    hilbert int64 + id, DELTA_BYTE_ARRAY prefix-delta for WKB whose
+    consecutive rows share header + high coordinate bytes after the
+    hilbert sort) + zstd. Measured on the bench layouts
+    (scripts/probe_parquet_encoding.py, 3M rows, interleaved reps):
     envelope layout 76.9 -> 31.5 MB (2.4x) with best write wall 3.9 -> 3.2 s,
     point layout 176.9 -> 145.6 MB (1.22x) with 4.0 -> 2.9 s; row-identical
-    content (exceptAll both ways = 0 and per-column bit_xor(xxhash64)
-    signatures equal on the same staged rows) and no read-side regression
-    (Spark's vectorized reader decodes v2 pages natively; probe read guard
-    0.2-0.7 s across variants)."""
+    content and no read-side regression (Spark's vectorized reader decodes
+    v2 pages natively)."""
     if point_xy is not None:
-        if bounds is None:
-            # compute the exact bounds HERE (same JVM agg the cluster lane
-            # would run) so the metadata sidecar needs no extra job
-            r = df.agg(
-                F.min(point_xy[0]), F.min(point_xy[1]), F.max(point_xy[0]), F.max(point_xy[1])
-            ).collect()[0]
-            # empty input (or all-null coordinates) aggregates to NULLs —
-            # degenerate bounds keep the downstream arithmetic well-defined
-            bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
-        clustered = hilbert_cluster_points(
-            df, point_xy[0], point_xy[1], geom_col, bounds, num_partitions,
-            sample_fraction if sample_fraction else 0.01,
-        )
+        clustered, bounds = _points_lane(df, *point_xy, geom_col, bounds, num_partitions)
     elif box_xyxy is not None:
-        if bounds is None:
-            r = df.agg(
-                F.min(box_xyxy[0]), F.min(box_xyxy[1]), F.max(box_xyxy[2]), F.max(box_xyxy[3])
-            ).collect()[0]
-            bounds = (r[0], r[1], r[2], r[3]) if r[0] is not None else (0.0, 0.0, 0.0, 0.0)
-        clustered = hilbert_cluster_boxes(
-            df, *box_xyxy, geom_col=geom_col, bounds=bounds,
-            num_partitions=num_partitions,
-            sample_fraction=sample_fraction if sample_fraction else 0.01,
-        )
+        clustered, bounds = _boxes_lane(df, *box_xyxy, geom_col, bounds, num_partitions)
     else:
-        clustered = hilbert_cluster(df, geom_col, bounds, num_partitions, sample_fraction)
+        clustered = hilbert_cluster(df, geom_col, bounds, num_partitions)
     clustered.write.mode(mode).options(**GEO_PARQUET_WRITE_OPTIONS).parquet(path)
-    if mode == "overwrite" and not path.startswith(("s3://", "s3a://", "hdfs://")):
-        # metadata sidecar for append_geo_parquet: the clustering bounds
-        # (explicit or just computed; the generic sampled lane reconstructs
-        # from the written footer stats — its own bounds are sampled)
+    if mode == "overwrite" and _local_dir(path) is not None:
         # one footer-stats job at WRITE time records per-file bboxes in
         # the manifest, so a windowed read can drop whole files from the
         # driver-side manifest BEFORE Spark lists them or tasks open
@@ -589,19 +427,19 @@ def write_geo_parquet(
             for r in frows
             if r["min_x"] is not None
         }
-        eff = bounds
-        if eff is None and frows:
-            xs = [r for r in frows if r["min_x"] is not None]
-            if xs:
-                eff = (
-                    min(r["min_x"] for r in xs), min(r["min_y"] for r in xs),
-                    max(r["max_x"] for r in xs), max(r["max_y"] for r in xs),
-                )
-        if eff is not None and eff[0] is not None:
+        if bounds is None and fmap:
+            # generic lane without given bounds: the data extent, from
+            # the footers just read
+            bs = list(fmap.values())
+            bounds = (
+                min(b[0] for b in bs), min(b[1] for b in bs),
+                max(b[2] for b in bs), max(b[3] for b in bs),
+            )
+        if bounds is not None:
             _write_layout_meta(
                 path,
                 {
-                    "bounds": [float(v) for v in eff],
+                    "bounds": [float(v) for v in bounds],
                     "geom_col": geom_col,
                     "generation": 1,
                     "files": fmap,
@@ -710,6 +548,19 @@ def _pyarrow_openable(fp: str):
     if fp.startswith("s3a://"):
         return "s3://" + fp[len("s3a://"):]
     return fp
+
+
+def _local_dir(path: str) -> str | None:
+    """Local filesystem path of a dataset location, for the file work
+    done with plain Python I/O (layout sidecar, compaction swap): plain
+    paths as given, ``file:`` URIs stripped like :func:`_pyarrow_openable`;
+    None for any other scheme (``s3a://``, ``hdfs://``, ``gs://``, ...)."""
+    from urllib.parse import urlparse
+
+    scheme = urlparse(path).scheme
+    if scheme == "file":
+        return _pyarrow_openable(path)
+    return None if scheme else path
 
 
 def geo_parquet_stats(
@@ -916,22 +767,29 @@ _LAYOUT_META = "_geo_layout.json"
 
 
 def _write_layout_meta(path: str, meta: dict) -> None:
+    """Write the sidecar; a no-op off the local filesystem."""
     import json as _json
     import os as _os
 
-    with open(_os.path.join(path, _LAYOUT_META), "w", encoding="utf-8") as f:
+    local = _local_dir(path)
+    if local is None:
+        return
+    with open(_os.path.join(local, _LAYOUT_META), "w", encoding="utf-8") as f:
         _json.dump(meta, f)
 
 
 def read_layout_meta(path: str) -> dict | None:
     """Layout metadata written by :func:`write_geo_parquet` (None for
     layouts written before this existed — callers fall back to footer
-    stats). Spark ignores underscore-prefixed files, so the sidecar never
-    pollutes reads."""
+    stats, and for locations off the local filesystem). Spark ignores
+    underscore-prefixed files, so the sidecar never pollutes reads."""
     import json as _json
     import os as _os
 
-    p = _os.path.join(path, _LAYOUT_META)
+    local = _local_dir(path)
+    if local is None:
+        return None
+    p = _os.path.join(local, _LAYOUT_META)
     if not _os.path.exists(p):
         return None
     with open(p, encoding="utf-8") as f:
@@ -943,7 +801,6 @@ def append_geo_parquet(
     path: str,
     geom_col: str = "geom",
     num_partitions: int | None = None,
-    sample_fraction: float | None = None,
     point_xy: tuple | None = None,
 ) -> None:
     """Append a batch to an existing clustered layout (rtree.cpp:Insert
@@ -966,9 +823,10 @@ def append_geo_parquet(
         bounds = (st[0], st[1], st[2], st[3])
     write_geo_parquet(
         df, path, geom_col=geom_col, mode="append", bounds=bounds,
-        num_partitions=num_partitions, sample_fraction=sample_fraction,
-        point_xy=point_xy,
+        num_partitions=num_partitions, point_xy=point_xy,
     )
+    if _local_dir(path) is None:
+        return  # no sidecar to refresh off the local filesystem
     gen = (meta or {}).get("generation", 1) + 1
     # refresh the per-file bounds so scan_geo_parquet's manifest pruning
     # stays exact across generations (one footer-stats job, append-time)
@@ -1029,10 +887,17 @@ def compact_geo_parquet(
     briefly does not exist, so a reader binding at that instant fails.
     Single-writer / no-concurrent-bind semantics; a truly atomic swap
     needs a symlink flip or a table-format commit protocol (Iceberg/Delta),
-    which is the recommended wrapper at production scale."""
+    which is the recommended wrapper at production scale. The swap needs
+    a local (or ``file:``) location."""
     import os as _os
     import shutil as _shutil
 
+    local = _local_dir(path)
+    if local is None:
+        raise ValueError(
+            f"{path}: compact_geo_parquet swaps local directories; use "
+            "compact_geo_snapshot or a table format on other filesystems"
+        )
     if layout_fragmentation(spark, path) <= min_fragmentation:
         return False
     meta = read_layout_meta(path)
@@ -1048,8 +913,8 @@ def compact_geo_parquet(
         _write_layout_meta(
             tmp, {**meta, **fresh, "generation": meta.get("generation", 1) + 1}
         )
-    old = path.rstrip("/") + "__old"
-    _os.rename(path, old)
-    _os.rename(tmp, path)
+    old = local.rstrip("/") + "__old"
+    _os.rename(local, old)
+    _os.rename(_local_dir(tmp), local)
     _shutil.rmtree(old)
     return True

@@ -112,3 +112,29 @@ def test_write_geo_parquet_box_lane_pruned_scan(spark, tmp_path):
         100, 100, 700, 700, exact="within", solid=True,
     ).count()
     assert pruned == expected
+
+
+def test_point_lane_null_centers_skip_split_sample(spark):
+    """Rows with NULL coordinates have no curve position, so the split
+    points are sampled from the non-null centers only: with half the rows
+    unpositioned, the positioned rows still spread over every partition
+    (NULL centers cast into the sample collapse the split points)."""
+    from duckdb_spatial_spark.plans.pruning import hilbert_cluster_points
+
+    df = spark.range(20000).selectExpr(
+        "id",
+        "CASE WHEN id % 2 = 0 THEN NULL ELSE CAST(pmod(hash(id, 1), 1000) AS DOUBLE) END AS x",
+        "CASE WHEN id % 2 = 0 THEN NULL ELSE CAST(pmod(hash(id, 2), 1000) AS DOUBLE) END AS y",
+    )
+    out = hilbert_cluster_points(df, "x", "y", bounds=(0, 0, 1000, 1000), num_partitions=4)
+    per = {
+        r.p: r.n
+        for r in out.select(F.spark_partition_id().alias("p"), "hilbert")
+        .filter("hilbert IS NOT NULL")
+        .groupBy("p")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert sum(per.values()) == 10000
+    assert len(per) == 4 and min(per.values()) > 0
+    assert max(per.values()) < 5000

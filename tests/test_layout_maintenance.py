@@ -113,3 +113,26 @@ def test_scan_geo_parquet_manifest_pruning(spark, tmp_path):
         P.scan_geo_parquet(spark, path, bbox=win), *win, exact="within", points=True
     ).count()
     assert n3 == n2_full
+
+
+def test_file_uri_layout_keeps_manifest(spark, tmp_path):
+    """A ``file://`` dataset URI maps to its local directory for the
+    manifest write, the manifest read and the compaction swap."""
+    uri = (tmp_path / "layout_uri").as_uri()
+    P.write_geo_parquet(_points(spark, 0, 20_000), uri, point_xy=("x", "y"), num_partitions=4)
+    assert P.read_layout_meta(uri)["generation"] == 1
+
+    win = (100.0, 100.0, 220.0, 220.0)
+    full = spark.read.parquet(uri)
+    pruned = P.scan_geo_parquet(spark, uri, bbox=win)
+    assert len(pruned.inputFiles()) < len(full.inputFiles())
+    n = P.filter_bbox(pruned, *win, exact="within", points=True).count()
+    assert n == P.filter_bbox(full, *win, exact="within", points=True).count() > 0
+
+    P.append_geo_parquet(
+        _points(spark, 20_000, 25_000), uri, point_xy=("x", "y"), num_partitions=2
+    )
+    assert P.read_layout_meta(uri)["generation"] == 2
+    assert P.compact_geo_parquet(spark, uri, min_fragmentation=0.0)
+    assert P.read_layout_meta(uri)["generation"] == 3
+    assert spark.read.parquet(uri).count() == 25_000

@@ -7,10 +7,16 @@ ST_GeneratePoints box + ST_Within(envelope) count."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.functions import udfs
-from duckdb_spatial_spark.plans import filter_bbox, hilbert_cluster, write_geo_parquet
+from duckdb_spatial_spark.plans import (
+    filter_bbox,
+    hilbert_cluster_boxes,
+    hilbert_cluster_points,
+    write_geo_parquet,
+)
 from duckdb_spatial_spark.sources import (
     read_geojson,
     st_drivers,
@@ -61,11 +67,20 @@ def test_hilbert_cluster_and_prune(spark, tmp_path):
     assert len(files_hit) < len(files_all)
 
 
-def test_hilbert_cluster_sampled_splits(spark, tmp_path):
-    """sample_fraction path: one-pass shuffle must preserve rows, produce
-    partition-disjoint hilbert ranges, and prune files like the exact path."""
-    pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=7)
-    clustered = hilbert_cluster(pts.repartition(8), num_partitions=8, sample_fraction=0.2)
+@pytest.mark.parametrize("lane", ["point_xy", "box_xyxy"])
+def test_lane_sampled_splits(spark, tmp_path, lane):
+    """The point and box lanes place rows by split points sampled from the
+    centers: placement keeps every row, gives partitions disjoint hilbert
+    ranges without pathological skew, and a windowed read skips files."""
+    pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=7).repartition(8)
+    if lane == "point_xy":
+        cols = ("x", "y")
+        src = pts.select("id", *cols)
+        clustered = hilbert_cluster_points(src, *cols, num_partitions=8)
+    else:
+        cols = ("x", "y", "x1", "y1")
+        src = pts.selectExpr("id", "x", "y", "x + 5 AS x1", "y + 5 AS y1")
+        clustered = hilbert_cluster_boxes(src, *cols, num_partitions=8)
     assert clustered.count() == 20000
 
     # partitions hold disjoint hilbert ranges (the locality contract)
@@ -81,8 +96,8 @@ def test_hilbert_cluster_sampled_splits(spark, tmp_path):
     # no pathological skew: largest partition < half the data
     assert max(r.n for r in rng) < 10000
 
-    out = str(tmp_path / "pts_sampled")
-    write_geo_parquet(pts.repartition(8), out, num_partitions=8, sample_fraction=0.2)
+    out = str(tmp_path / f"sampled_{lane}")
+    write_geo_parquet(src, out, num_partitions=8, **{lane: cols})
     back = spark.read.parquet(out)
     assert back.count() == 20000
     files_all = {r.f for r in back.select(F.input_file_name().alias("f")).distinct().collect()}
@@ -150,7 +165,7 @@ def test_geo_parquet_stats_view(spark, tmp_path):
         .select("id", "geom")
     )
     out = str(tmp_path / "statsds")
-    write_geo_parquet(pts, out, num_partitions=4, sample_fraction=0.2)
+    write_geo_parquet(pts, out, num_partitions=4)
 
     st = geo_parquet_stats(spark, out).collect()
     assert len(st) >= 4  # at least one row group per partition file
@@ -240,13 +255,12 @@ def test_geojson_pushdown(spark, tmp_path):
 
 
 def test_point_ingest_cluster_matches_generic(spark, tmp_path):
-    """point_xy= ingest lane: JVM-side stats + fused WKB/bbox/hilbert UDF
+    """point_xy= ingest lane: JVM-side stats + one hilbert/route crossing
     produces the same queryable layout as the generic geometry path."""
     pts = st_generatepoints(spark, 0, 0, 10000, 10000, 20000, seed=99)
     a, b = str(tmp_path / "generic"), str(tmp_path / "points")
     write_geo_parquet(
-        pts.withColumn("geom", udfs.st_point("x", "y")).select("id", "geom"),
-        a, num_partitions=8, sample_fraction=0.05,
+        pts.withColumn("geom", udfs.st_point("x", "y")).select("id", "geom"), a, num_partitions=8
     )
     write_geo_parquet(pts.select("id", "x", "y"), b, num_partitions=8, point_xy=("x", "y"))
     da, db = spark.read.parquet(a), spark.read.parquet(b)
